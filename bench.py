@@ -10,10 +10,12 @@ isn't attributed to the first measured query.
 
 Timings are the PER-QUERY MEDIAN over $SPARK_GRAFT_BENCH_RUNS passes
 (default 3): single runs at sf0.1 show ~3s random stalls on arbitrary
-queries (GC pause / page-cache eviction / codegen-cache churn), so a
-one-shot number can misreport a query by 2-3x. The median of three is
-stable to one such stall per query while still penalizing consistent
-slowness.
+queries (GC pause / page-cache eviction), so a one-shot number can
+misreport a query by 2-3x. The median of three is stable to one such
+stall per query while still penalizing consistent slowness. Codegen-cache
+churn, once blamed here too, was not random: at Spark's default of 100
+entries every pass deterministically evicted the previous pass's compiled
+classes. The engine session now holds 4096 (session.py).
 """
 
 from __future__ import annotations

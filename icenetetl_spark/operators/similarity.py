@@ -96,7 +96,11 @@ def _qident(name: str) -> str:
     SQL-text path accepts any name ``F.col`` accepts (spaces, hyphens,
     reserved words — ADVICE r13 #2). Dots keep their ``F.col`` meaning
     (qualifier / struct-field separators); embedded backticks escape by
-    doubling, the standard Spark identifier rule."""
+    doubling, the standard Spark identifier rule. A name already wrapped in
+    backticks is a complete quoted reference (how ``F.col`` takes a column
+    literally named ``a.b``) and passes through unchanged."""
+    if len(name) > 1 and name[0] == name[-1] == "`":
+        return name
     return ".".join(
         "`" + part.replace("`", "``") + "`" for part in name.split(".")
     )

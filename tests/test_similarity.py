@@ -309,3 +309,49 @@ def test_dot_unrolled_string_form_is_tree_identical(spark, emb):
     assert [r["c"] for r in cos_col.collect()] == [
         r["c"] for r in cos_str.collect()
     ]
+
+
+def test_dot_unrolled_string_form_takes_backticked_names(spark):
+    """A column literally named ``a.b`` is referenced as ```a.b``` (the
+    ``F.col`` rule); the SQL-text path must not split it on the dot."""
+    from icenetetl_spark.operators.similarity import dot_unrolled
+
+    df = spark.createDataFrame(
+        [([1.0, 2.0],), ([3.0, -0.5],)], "`a.b` array<double>"
+    )
+    got = df.select(dot_unrolled("`a.b`", "`a.b`", 2).alias("d")).collect()
+    want = df.select(
+        dot_unrolled(F.col("`a.b`"), F.col("`a.b`"), 2).alias("d")
+    ).collect()
+    assert [r["d"] for r in got] == [r["d"] for r in want] == [5.0, 9.25]
+
+
+def test_registry_dot_sql_text_unchanged_for_plain_names(spark, monkeypatch):
+    """Registry queries pass plain names: their SQL text must stay
+    byte-identical to the per-part quoting rule, so plans and oracle
+    hashes do not move."""
+    from icenetetl_spark.operators import similarity
+    from icenetetl_spark.queries.similarity import knn_bruteforce_prenorm
+
+    def per_part(name):
+        parts = name.split(".")
+        return ".".join("`" + p.replace("`", "``") + "`" for p in parts)
+
+    seen = []
+    dot_sql = similarity._dot_sql
+
+    def recording(x, y, dim):
+        text = dot_sql(x, y, dim)
+        seen.append((x, y, dim, text))
+        return text
+
+    monkeypatch.setattr(similarity, "_dot_sql", recording)
+    knn_bruteforce_prenorm(spark, SF_DIR)
+    assert seen
+    for x, y, dim, text in seen:
+        xq, yq = per_part(x), per_part(y)
+        assert text == "0.0D + " + " + ".join(
+            f"CAST(element_at({xq}, {i}) AS DOUBLE) * "
+            f"CAST(element_at({yq}, {i}) AS DOUBLE)"
+            for i in range(1, dim + 1)
+        )

@@ -8,7 +8,9 @@ base,head,base,head,... of ONE shared runner script (so both sides run
 identical measurement code against their own icenetetl_spark), each run
 being bench-methodology medians-of-3 (warmup tables + construction +
 noop sink per pass). Per-side per-query medians-of-runs and the
-head/base ratio are reported.
+head/base ratio are reported, next to each query's codegen compile count:
+the JVM's CodegenMetrics compilation count over its three timed reps
+(classes Janino compiled, i.e. codegen-cache misses).
 
 Usage:
     python tools/focused_ab.py BASE_COMMIT REPS query [query ...]
@@ -43,16 +45,21 @@ li.groupBy("l_returnflag").count().count()
 spark.range(64).repartition(32).mapInPandas(lambda it: it, "id long").count()
 spark.range(128).localCheckpoint(eager=True).count()
 qs = all_queries()
+codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
 out = {}
 for name in names:
     fn = qs[name]
     walls = []
+    c0 = codegen.METRIC_COMPILATION_TIME().getCount()
     for _ in range(3):
         t0 = time.time()
         df = fn(spark, SF_DIR)
         df.write.format("noop").mode("overwrite").save()
         walls.append(time.time() - t0)
-    out[name] = round(statistics.median(walls), 3)
+    out[name] = {
+        "wall": round(statistics.median(walls), 3),
+        "compiles": codegen.METRIC_COMPILATION_TIME().getCount() - c0,
+    }
 spark.stop()
 print("FOCUSED_AB " + json.dumps(out))
 '''
@@ -102,20 +109,25 @@ def main() -> None:
             )
     out: dict = {"base_commit": base, "reps": reps, "queries": {}}
     for q in names:
-        med = {
-            s: statistics.median(r[q] for r in results[s])
-            for s in ("base", "head")
-        }
+        walls = {s: [r[q]["wall"] for r in results[s]] for s in results}
+        comps = {s: [r[q]["compiles"] for r in results[s]] for s in results}
+        med = {s: statistics.median(walls[s]) for s in results}
+        cmed = {s: statistics.median(comps[s]) for s in results}
         out["queries"][q] = {
             "base": round(med["base"], 3),
             "head": round(med["head"], 3),
             "ratio": round(med["head"] / med["base"], 3) if med["base"] else None,
-            "base_all": [r[q] for r in results["base"]],
-            "head_all": [r[q] for r in results["head"]],
+            "base_all": walls["base"],
+            "head_all": walls["head"],
+            "base_compiles": cmed["base"],
+            "head_compiles": cmed["head"],
+            "base_compiles_all": comps["base"],
+            "head_compiles_all": comps["head"],
         }
         print(
             f"{q}: base {med['base']:.3f} head {med['head']:.3f} "
-            f"ratio {med['head']/med['base']:.3f}",
+            f"ratio {med['head']/med['base']:.3f}  "
+            f"compiles base {cmed['base']:g} head {cmed['head']:g}",
             file=sys.stderr,
         )
     print(json.dumps(out))
