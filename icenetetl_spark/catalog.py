@@ -14,22 +14,28 @@ concurrent-writer-safe) — this class is the seam where that swap happens.
 Scale notes:
 - ``append_missing`` reads only the key columns of the existing side
   (projection pushdown) and lets AQE broadcast the smaller side of the anti
-  join; with a date/hemisphere-partitioned table, callers pre-filter the
-  existing side to the touched partitions (partition pruning) so the anti
-  join never scans history.
+  join. It anti-joins against the WHOLE existing table: no caller
+  pre-filters it to the partitions the batch touches, so the key scan
+  grows with history (pruning it is an open ROADMAP item).
 - Tables are written ``partitionBy`` the columns declared in
   ``PARTITIONING`` — date + hemisphere, mirroring the reference's B-tree
   read-path indexes (processor.py:286-288) with layout instead of indexes.
+- Every catalog write stores the table's read schema next to its data
+  (``SCHEMA_FILE``), the way Postgres keeps a table's schema in its
+  catalog. ``read`` hands it to ``spark.read.schema``, so opening a table
+  launches no footer-reading inference job.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import uuid
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from icenetetl_spark.operators.relational import insert_missing, upsert as upsert_plan
 
@@ -37,6 +43,24 @@ PARTITIONING: dict[str, list[str]] = {
     "forecasts": ["hemisphere", "date_forecast_generated"],
     "cells": ["hemisphere"],
 }
+
+# Written into each table directory. The leading underscore makes Spark's
+# file index and pyarrow's dataset discovery skip it.
+SCHEMA_FILE = "_schema.json"
+
+
+def _read_schema(df: DataFrame, partition_by: Sequence[str]) -> StructType:
+    """The schema a Parquet read returns for ``df`` written with
+    ``partitionBy(*partition_by)``: data columns in order, then the
+    partition columns. (Spark reads every file-source column as nullable
+    whatever the schema says, so nullability needs no adjusting.)"""
+    fields = [f for f in df.schema if f.name not in partition_by]
+    return StructType(fields + [df.schema[c] for c in partition_by])
+
+
+def _writer(df: DataFrame, mode: str, partition_by: Sequence[str]):
+    w = df.write.mode(mode)
+    return w.partitionBy(*partition_by) if partition_by else w
 
 
 class ParquetCatalog:
@@ -61,7 +85,15 @@ class ParquetCatalog:
         return False
 
     def read(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(self.path(name))
+        """The table, under its stored schema when it has one (no inference
+        job); a directory without ``SCHEMA_FILE`` is read by inference."""
+        path = self.path(name)
+        try:
+            with open(os.path.join(path, SCHEMA_FILE)) as f:
+                schema = StructType.fromJson(json.load(f))
+        except FileNotFoundError:
+            return self.spark.read.parquet(path)
+        return self.spark.read.schema(schema).parquet(path)
 
     def read_pruned(
         self, name: str, branches: Sequence[Sequence[tuple[str, str, object]]]
@@ -85,47 +117,54 @@ class ParquetCatalog:
             disj = disj | conj
         return self.read(name).filter(disj)
 
-    def _writer(self, df: DataFrame, name: str):
-        w = df.write
-        parts = PARTITIONING.get(name)
-        return w.partitionBy(*parts) if parts else w
+    def _create(self, df: DataFrame, path: str, partition_by: Sequence[str]) -> None:
+        """Write ``df`` as a whole table at ``path`` and store its read
+        schema beside the data."""
+        _writer(df, "overwrite", partition_by).parquet(path)
+        with open(os.path.join(path, SCHEMA_FILE), "w") as f:
+            f.write(_read_schema(df, partition_by).json())
 
-    def overwrite(self, name: str, df: DataFrame) -> None:
-        """CREATE OR REPLACE TABLE AS SELECT — matview refresh semantics.
-        Staged write + directory swap so a plan reading the old table can
-        finish materializing before the old files disappear."""
+    def _swap(self, name: str, df: DataFrame, partition_by: Sequence[str]) -> None:
+        """Staged write + directory swap, so a plan reading the old table
+        can finish materializing before the old files disappear."""
         staging = self.path(f".staging-{name}-{uuid.uuid4().hex[:8]}")
-        self._writer(df, name).mode("overwrite").parquet(staging)
+        self._create(df, staging, partition_by)
         target = self.path(name)
         if os.path.isdir(target):
             shutil.rmtree(target)
         os.rename(staging, target)
 
+    def overwrite(self, name: str, df: DataFrame) -> None:
+        """CREATE OR REPLACE TABLE AS SELECT — matview refresh semantics."""
+        self._swap(name, df, PARTITIONING.get(name, ()))
+
     def append(self, name: str, df: DataFrame) -> None:
-        self._writer(df, name).mode("append").parquet(self.path(name))
+        _writer(df, "append", PARTITIONING.get(name, ())).parquet(self.path(name))
 
     def append_missing(self, name: str, df: DataFrame, keys: Sequence[str]) -> int:
         """INSERT ... ON CONFLICT DO NOTHING. Returns rows appended.
         Idempotent: replaying the same batch appends nothing."""
         if not self.exists(name):
-            self._writer(df, name).mode("overwrite").parquet(self.path(name))
+            self._create(df, self.path(name), PARTITIONING.get(name, ()))
             return -1
-        fresh = insert_missing(df, self.read(name), keys)
-        # Materialize to staging before appending: `fresh` reads the target
-        # table lazily, and appending while scanning the same files is racy.
-        staging = self.path(f".staging-{name}-{uuid.uuid4().hex[:8]}")
-        fresh.write.parquet(staging)
-        fresh_back = self.spark.read.parquet(staging)
-        n = fresh_back.count()
+        # The anti join puts the keys first; restore the table's column
+        # order so every data file of the table has the same layout. The
+        # checkpoint is eager: once it returns, `fresh` no longer reads the
+        # target table lazily, so appending to those files is safe.
+        fresh = (
+            insert_missing(df, self.read(name), keys)
+            .select(*df.columns)
+            .localCheckpoint()
+        )
+        n = fresh.count()
         if n:
-            self.append(name, fresh_back)
-        shutil.rmtree(staging)
+            self.append(name, fresh)
         return n
 
     def upsert(self, name: str, df: DataFrame, keys: Sequence[str]) -> None:
         """INSERT ... ON CONFLICT DO UPDATE (last-writer-wins on key)."""
         if not self.exists(name):
-            self._writer(df, name).mode("overwrite").parquet(self.path(name))
+            self._create(df, self.path(name), PARTITIONING.get(name, ()))
             return
         merged = upsert_plan(df, self.read(name), keys)
         self.overwrite(name, merged)
@@ -165,14 +204,9 @@ class ParquetCatalog:
             clustered = df.repartitionByRange(num_files, *cols).sortWithinPartitions(
                 *cols
             )
-        staging = self.path(f".staging-{name}-{uuid.uuid4().hex[:8]}")
         # plain (non-hive-partitioned) layout: clustering replaces
         # partitioning for high-cardinality columns
-        clustered.write.mode("overwrite").parquet(staging)
-        target = self.path(name)
-        if os.path.isdir(target):
-            shutil.rmtree(target)
-        os.rename(staging, target)
+        self._swap(name, clustered, ())
 
     def compact(self, name: str, target_file_bytes: int = 128 * 1024 * 1024) -> int:
         """Rewrite the table into ~target-sized files.

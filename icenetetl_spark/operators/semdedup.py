@@ -83,35 +83,38 @@ def _stage_cells(
     join's consume method, which overflows the JVM's 64 KB method limit
     and drops the pair stage out of codegen; with norms precomputed once
     per member the pair stage is ONE unrolled dot plus a divide. Values
-    BIT-IDENTICAL: dot/(sqrt(aa)*sqrt(bb)) == dot/(na*nb) exactly."""
+    BIT-IDENTICAL: dot/(sqrt(aa)*sqrt(bb)) == dot/(na*nb) exactly.
+
+    Each staged column records the parameter it was derived with in its
+    column metadata (``__blk``: ``cell_cap``, ``__nrm``: ``dim``), so
+    :func:`_is_staged` can tell a frame staged under other parameters."""
     if cell_cap is not None:
         rk = F.row_number().over(
             Window.partitionBy("cell").orderBy(F.desc("csim"), "vec_id")
         )
         cells = cells.withColumn(
             "__blk", F.floor((rk - F.lit(1)) / F.lit(int(cell_cap)))
-        )
+        ).withMetadata("__blk", {"cell_cap": int(cell_cap)})
     if dim:
         from icenetetl_spark.operators.similarity import dot_unrolled
 
         cells = cells.withColumn(
             "__nrm", F.sqrt(dot_unrolled("v", "v", dim))
-        )
+        ).withMetadata("__nrm", {"dim": int(dim)})
     return cells
 
 
 def _is_staged(
     cells: DataFrame, dim: int | None, cell_cap: int | None
 ) -> bool:
-    """True when ``cells`` already carries every staged column the
-    (dim, cell_cap) combination needs (i.e. came through
-    :func:`_stage_cells`)."""
-    cols = set(cells.columns)
-    if cell_cap is not None and "__blk" not in cols:
-        return False
-    if dim and "__nrm" not in cols:
-        return False
-    return True
+    """True when ``cells`` came through :func:`_stage_cells` with this
+    (dim, cell_cap): every staged column the combination needs is present
+    AND carries the same parameter in its metadata. A frame staged with
+    another ``cell_cap`` has stale block splits and must be re-staged."""
+    meta = {f.name: f.metadata for f in cells.schema}
+    blk_ok = cell_cap is None or meta.get("__blk", {}).get("cell_cap") == cell_cap
+    nrm_ok = not dim or meta.get("__nrm", {}).get("dim") == dim
+    return blk_ok and nrm_ok
 
 
 def _pairs_from_cells(

@@ -11,8 +11,10 @@ invariant (README.md:42-51: retry = re-upload the blob).
 
 Scale notes (100 TB of forecasts):
 - ``forecasts`` is partitioned by (hemisphere, date_forecast_generated); each
-  ingest touches exactly one partition, so the dedup anti join prunes to that
-  partition instead of scanning history.
+  ingest touches exactly one partition. The dedup anti join does NOT prune to
+  it: ``update_forecasts`` anti-joins against the whole ``forecasts`` table
+  (key columns only), so its scan grows with history. Pre-filtering the
+  existing side to the touched partition is an open ROADMAP item.
 - The cell lookup join broadcasts the cells table (~187k rows/hemisphere ≪
   broadcast threshold) — same strategy the reference hand-rolls by preloading
   cells into pandas (processor.py:296-321).
@@ -337,6 +339,11 @@ class IceNetPipeline:
         self, raw: DataFrame, attrs: FileAttrs, incremental_meta: bool = False
     ) -> None:
         hemisphere = classify_hemisphere(attrs)
+        # Parse the file once: the cell axes, the grid spacing and the
+        # normalized facts each scan ``raw``, and unpinned every scan would
+        # re-run the source (for NetCDF, the binaryFile read plus the Python
+        # parse). Eager, like sequential_id's pin on the same path.
+        raw = raw.localCheckpoint()
         forecasts = normalize_forecasts(raw, hemisphere)
         self.update_geometries(raw, hemisphere)
         self.update_forecasts(forecasts, hemisphere)

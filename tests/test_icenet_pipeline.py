@@ -316,3 +316,146 @@ def test_txn_pipeline_concurrent_ingest_loses_no_rows(spark, tmp_path):
     key = ["hemisphere", "date_forecast_generated", "date_forecast_for", "cell_id"]
     forecasts = cat.read("forecasts")
     assert forecasts.select(*key).distinct().count() == forecasts.count()
+
+
+TABLES = ["cells", "forecasts", "forecast_latest", "forecast_meta"]
+
+
+def _jobs_launched(spark, fn):
+    """(number of Spark jobs ``fn()`` launched, its result), counted by a
+    fresh job group through the status tracker."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group, False)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+# Measured: 36 jobs for a steady-state file of make_raw_file's default
+# 16x16 grid, plus a small margin.
+SECOND_FILE_JOB_BUDGET = 38
+
+
+def test_ingest_job_budget_and_job_free_reads(spark, warehouse):
+    """Fixed per-file overhead stays bounded: reading a catalog-written
+    table plans from its stored schema (no footer-inference job), and a
+    second same-hemisphere file ingests within a measured job budget."""
+    cat = ParquetCatalog(spark, warehouse)
+    pipe = IceNetPipeline(cat)
+    f1, a1 = make_raw_file(spark, "2024-03-01", "north", seed=1)
+    f2, a2 = make_raw_file(spark, "2024-03-08", "north", seed=2)
+    pipe.run(f1, a1)
+    n_jobs, _ = _jobs_launched(spark, lambda: pipe.run(f2, a2))
+    assert n_jobs <= SECOND_FILE_JOB_BUDGET
+    for t in TABLES:
+        n_read, df = _jobs_launched(spark, lambda: cat.read(t))
+        assert n_read == 0, t
+        assert df.columns  # the schema is there without an action
+
+
+def test_stored_schema_round_trips(spark, warehouse):
+    """The stored schema is exactly what inference would return, after
+    every kind of catalog write: pipeline create/append, upsert, compact
+    and the unpartitioned cluster_by layout. A table directory without
+    the schema file still reads, by inference."""
+    import os
+
+    from icenetetl_spark.catalog import SCHEMA_FILE
+
+    cat = ParquetCatalog(spark, warehouse)
+    pipe = IceNetPipeline(cat)
+
+    def check(step):
+        for t in TABLES:
+            assert os.path.isfile(os.path.join(cat.path(t), SCHEMA_FILE)), (step, t)
+            inferred = spark.read.parquet(cat.path(t)).schema
+            assert cat.read(t).schema == inferred, (step, t)
+
+    for date, seed in [("2024-03-01", 1), ("2024-03-08", 2)]:
+        f, a = make_raw_file(spark, date, "north", grid_side=6, seed=seed)
+        pipe.run(f, a)  # the second run upserts forecast_meta
+    check("pipeline")
+    pipe.update_meta()  # upsert against an existing table
+    check("upsert")
+    rows = {t: table_fingerprint(cat.read(t)) for t in TABLES}
+    for t in TABLES:
+        cat.compact(t)
+    check("compact")
+    for t, cols in [
+        ("cells", ["centroid_x"]),
+        ("forecasts", ["date_forecast_for", "cell_id"]),
+        ("forecast_latest", ["cell_id"]),
+        ("forecast_meta", ["date_forecast_generated"]),
+    ]:
+        cat.cluster_by(t, cols, num_files=2)
+    check("cluster_by")
+    assert {t: table_fingerprint(cat.read(t)) for t in TABLES} == rows
+
+    os.remove(os.path.join(cat.path("forecasts"), SCHEMA_FILE))
+    assert cat.read("forecasts").schema == spark.read.parquet(
+        cat.path("forecasts")
+    ).schema
+    assert table_fingerprint(cat.read("forecasts")) == rows["forecasts"]
+
+
+def test_append_missing_counts_and_leaves_no_staging(spark, warehouse):
+    """append_missing returns exactly the rows it added, a replay adds
+    nothing (not even an empty data file), and no staging directory is
+    ever left behind. Appended files keep the table's column order."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    cat = ParquetCatalog(spark, warehouse)
+    keys = ["hemisphere", "date_forecast_generated", "date_forecast_for", "cell_id"]
+
+    def batch(lo, hi):
+        return spark.range(lo, hi).select(
+            F.col("id").alias("forecast_id"),
+            F.lit("north").alias("hemisphere"),
+            F.lit("2024-03-01").cast("date").alias("date_forecast_generated"),
+            F.lit("2024-03-02").cast("date").alias("date_forecast_for"),
+            F.col("id").alias("cell_id"),
+            (F.col("id") / 100.0).cast("float").alias("sea_ice_concentration_mean"),
+            F.lit(0.1).cast("float").alias("sea_ice_concentration_stddev"),
+        )
+
+    def data_files():
+        return sorted(
+            os.path.join(r, f)
+            for r, _d, fs in os.walk(cat.path("forecasts"))
+            for f in fs
+            if f.endswith(".parquet")
+        )
+
+    def no_staging():
+        return not [d for d in os.listdir(warehouse) if d.startswith(".staging-")]
+
+    assert cat.append_missing("forecasts", batch(0, 30), keys) == -1  # create
+    assert no_staging()
+    for lo, hi in [(20, 50), (45, 90)]:
+        before = cat.read("forecasts").count()
+        n = cat.append_missing("forecasts", batch(lo, hi), keys)
+        assert n == cat.read("forecasts").count() - before == hi - max(lo, before)
+        assert no_staging()
+    files = data_files()
+    assert cat.append_missing("forecasts", batch(0, 90), keys) == 0  # replay
+    assert no_staging()
+    assert data_files() == files
+    assert cat.read("forecasts").count() == 90
+    layouts = {tuple(pq.read_schema(p).names) for p in files}
+    assert layouts == {
+        (
+            "forecast_id",
+            "date_forecast_for",
+            "cell_id",
+            "sea_ice_concentration_mean",
+            "sea_ice_concentration_stddev",
+        )
+    }

@@ -308,6 +308,31 @@ def test_staged_cells_matches_unstaged_pairs(spark, emb, cents):
     )
 
 
+def test_staged_cells_not_reused_under_another_cell_cap(spark, emb, cents):
+    """A frame staged with one cell_cap carries block splits for THAT cap:
+    passed to the pair stage under another cap it must be re-staged, not
+    silently reused. A matching frame keeps its staging through the
+    checkpoint semdedup_from_cells pins it with."""
+    from icenetetl_spark.operators.semdedup import (
+        _is_staged,
+        _pairs_from_cells,
+        _stage_cells,
+    )
+
+    cells = assign_cells_fixed(emb, cents, dim=64)
+    staged4 = _stage_cells(cells, dim=64, cell_cap=4).localCheckpoint(eager=False)
+    assert _is_staged(staged4, 64, 4)
+    assert not _is_staged(staged4, 64, 8)
+    key = ["doc_a", "doc_b", "cell", "__blk", "cos"]
+    want = _pairs_from_cells(cells, SEM_T, dim=64, cell_cap=8).select(*key)
+    got = _pairs_from_cells(staged4, SEM_T, dim=64, cell_cap=8).select(*key)
+    want_rows = sorted(map(tuple, want.collect()))
+    assert want_rows == sorted(map(tuple, got.collect()))
+    # non-vacuous: cap 4 confines pairs that cap 8 finds
+    capped4 = _pairs_from_cells(staged4, SEM_T, dim=64, cell_cap=4)
+    assert capped4.count() < len(want_rows)
+
+
 def test_two_level_pre_checkpoint_values_unchanged(spark, emb):
     """r14: assign_cells_two_level materializes its (id, v, ||v||)
     projection once (3 plan consumers); assignment values must equal the
