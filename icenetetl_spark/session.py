@@ -28,6 +28,10 @@ Design notes (100 TB posture):
   cache keeps minting classes that must later be collected. The conf is
   static (read when the SparkContext starts); override it like any default,
   e.g. ``get_spark(extra_conf={"spark.sql.codegen.cache.maxEntries": "100"})``.
+- ``spark.driver.memory`` defaults to half the host's physical memory. In
+  local mode the driver JVM is also every executor, and it shares the host
+  with the Python workers and the OS page cache; a fixed size can exceed a
+  small host outright. ``SPARK_DRIVER_MEMORY`` overrides it.
 """
 
 from __future__ import annotations
@@ -44,6 +48,12 @@ def default_parallelism() -> int:
     if cpus:
         return max(1, int(cpus))
     return os.cpu_count() or 4
+
+
+def default_driver_memory() -> str:
+    """Half the host's physical memory, in Spark's ``<n>m`` form."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{phys // 2 // 2**20}m"
 
 
 def get_spark(
@@ -72,7 +82,10 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY", default_driver_memory()),
+        )
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in (extra_conf or {}).items():

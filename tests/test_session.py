@@ -2,9 +2,11 @@
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
-from icenetetl_spark.session import CODEGEN_CACHE_ENTRIES
+from icenetetl_spark.session import CODEGEN_CACHE_ENTRIES, default_driver_memory
 
 
 def _compiles(spark) -> int:
@@ -34,3 +36,13 @@ def test_codegen_cache_holds_more_than_sparks_default(spark):
     before = _compiles(spark)
     first()
     assert _compiles(spark) == before
+
+
+def test_default_driver_heap_fits_the_host(spark):
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    heap = default_driver_memory()
+    assert heap.endswith("m")
+    assert 0 < int(heap[:-1]) * 2**20 <= phys
+    assert spark.conf.get("spark.driver.memory") == os.environ.get(
+        "SPARK_DRIVER_MEMORY", heap
+    )

@@ -34,6 +34,18 @@ def duck_connection():
     return con
 
 
+def pinned_elsewhere(name):
+    """True for a query whose oracle embeds a model pinned at sf0.01 (the
+    trained-BPE VALUES literal, fixed-encode reuse) while SF_DIR is another
+    SF: there the comparison is trainer-on-this-corpus vs the sf0.01
+    constant, a guaranteed false red (ADVICE r8)."""
+    from icenetetl_spark.queries.tokenizer import PINNED_AT_SF001
+
+    return name in PINNED_AT_SF001 and not os.path.normpath(SF_DIR).endswith(
+        "sf0.01"
+    )
+
+
 def normalize(df):
     """pandas frame -> sorted list of tuples with normalized cell values."""
     import datetime
@@ -123,18 +135,11 @@ def main():
     spark = get_spark("oracle-check")
     con = duck_connection()
     queries, oracles = all_queries(), all_oracles()
-    # oracles that embed a model pinned at sf0.01 (trained-BPE VALUES
-    # literal / fixed-encode reuse) are only meaningful at that SF — at any
-    # other SF the comparison is trainer-on-this-corpus vs the sf0.01
-    # constant, a guaranteed false red (ADVICE r8)
-    from icenetetl_spark.queries.tokenizer import PINNED_AT_SF001
-
-    at_gate_sf = os.path.normpath(SF_DIR).endswith("sf0.01")
     failures = 0
     for name, fn in queries.items():
         if only and name not in only:
             continue
-        if name in PINNED_AT_SF001 and not at_gate_sf:
+        if pinned_elsewhere(name):
             print(f"  {name:28s} skipped: oracle pinned at sf0.01, SF={SF_DIR}")
             continue
         t0 = time.time()
